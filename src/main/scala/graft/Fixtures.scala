@@ -17,54 +17,10 @@ import graft.meta._
   * ids are contiguous 0..n-1 in the test data, so `base_offset = event_id`).
   *
   * Builders are memoized per (sfDir, name): queries may be invoked repeatedly
-  * in one JVM (verify + bench) without re-appending.
+  * in one JVM without re-appending.
   */
 object Fixtures {
   private val cache = TrieMap[String, String]()
-
-  // Temp dirs the UNMEMOIZED *Fresh twins create (full stream copies): a
-  // bench run invokes each twin 4x (1 warm + 3 timed), so without cleanup a
-  // larger-SF bench leaves gigabytes behind. Registered here, reclaimed by
-  // [[dropFresh]] — called OUTSIDE any timed region.
-  private val freshDirs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-  private def freshDir(prefix: String): String = {
-    val d = Files.createTempDirectory(prefix).toString
-    freshDirs.add(d)
-    d
-  }
-
-  /** Delete every temp dir the *Fresh twins (and their checkpoints) have
-    * created so far. Call after the timed body completes — deletion cost
-    * never lands inside a benchmark region. */
-  def dropFresh(): Unit = {
-    var d = freshDirs.poll()
-    while (d != null) {
-      try {
-        import java.nio.file.{Files => F, Paths}
-        import scala.jdk.CollectionConverters._
-        val root = Paths.get(d)
-        if (F.exists(root)) {
-          val s = F.walk(root)
-          try s.iterator().asScala.toSeq.reverseIterator
-            .foreach(p => F.deleteIfExists(p))
-          finally s.close()
-        }
-      } catch { case _: java.io.IOException => () } // best-effort reclamation
-      d = freshDirs.poll()
-    }
-  }
-
-  /** UNMEMOIZED migration-in destination: a fresh stream whose metadata
-    * declares ONE open imported segment starting at `start` — the boundary
-    * shape a PD snapshot ingest leaves — ready for offset-preserving
-    * [[EsLog.backfill]]. Registered for [[dropFresh]] reclamation (the
-    * bench's backfill head creates one per timed run). */
-  def importedStreamFresh(s: SparkSession, start: Long): String = {
-    val dir = freshDir("graft-pd-dst-")
-    EsLog.create(dir, streamId = 96L)
-    MetaLog.commitWithRetry(dir)(_ => Seq(graft.meta.ImportSegment(0, start, None, 1L)))
-    dir
-  }
 
   /** Session settings every query needs: an INT64-nanos `events.ts` should
     * read as a plain long (portable, timezone-free), and timestamp math must
@@ -132,29 +88,18 @@ object Fixtures {
   /** The flagship two-segment stream: first half of events under epoch 1,
     * seal-on-reopen, second half under epoch 2. base_offset == event_id. */
   def eventsStream(s: SparkSession, sfDir: String): String =
-    fixture(sfDir, "events")(buildEventsStream(s, sfDir, _))
-
-  /** UNMEMOIZED twin of [[eventsStream]] — a brand-new stream dir per call,
-    * so a benchmark re-run re-executes the full append pipeline instead of
-    * timing a memoized no-op. */
-  def eventsStreamFresh(s: SparkSession, sfDir: String): String = {
-    val dir = freshDir("graft-events-fresh-")
-    buildEventsStream(s, sfDir, dir)
-    dir
-  }
-
-  private def buildEventsStream(s: SparkSession, sfDir: String, dir: String): Unit = {
-    val in = eventBatches(s, sfDir)
-    val n = in.count()
-    val k = n / 2
-    EsLog.create(dir, streamId = 42L)
-    EsLog.open(dir, 1L)
-    EsLog.append(s, dir, in.where(col("event_id") < k), 1L,
-      sortKey = Some("event_id"), numPartitions = 4)
-    EsLog.open(dir, 2L) // seal-on-open recovery fences epoch 1
-    EsLog.append(s, dir, in.where(col("event_id") >= k), 2L,
-      sortKey = Some("event_id"), numPartitions = 4)
-  }
+    fixture(sfDir, "events") { dir =>
+      val in = eventBatches(s, sfDir)
+      val n = in.count()
+      val k = n / 2
+      EsLog.create(dir, streamId = 42L)
+      EsLog.open(dir, 1L)
+      EsLog.append(s, dir, in.where(col("event_id") < k), 1L,
+        sortKey = Some("event_id"), numPartitions = 4)
+      EsLog.open(dir, 2L) // seal-on-open recovery fences epoch 1
+      EsLog.append(s, dir, in.where(col("event_id") >= k), 2L,
+        sortKey = Some("event_id"), numPartitions = 4)
+    }
 
   /** [[eventsStream]] cloned at its FIRST data commit ([[graft.eslog.EsLog
     * .cloneStream]] version-pinned): an independent stream whose content is
@@ -165,8 +110,6 @@ object Fixtures {
       val src = eventsStream(s, sfDir)
       val firstCommit = graft.meta.MetaLog.firstDataCommit(src)
         .getOrElse(sys.error(s"no data commit in $src"))
-      // NOT freshDir: this dir is memoized for the session, so it must not
-      // be swept by dropFresh() between uses
       val dst = Files.createTempDirectory("graft-events-clone-").toString
       graft.eslog.EsLog.cloneStream(s, src, dst, version = firstCommit)
       dst
@@ -484,36 +427,23 @@ object Fixtures {
   /** Structured-Streaming roundtrip: the flagship stream drained through the
     * rate-limited eslog source into an eslog sink (AvailableNow). */
   def streamRoundtrip(s: SparkSession, sfDir: String): String =
-    fixture(sfDir, "stream-rt")(buildStreamRoundtrip(s, sfDir, _))
-
-  /** UNMEMOIZED twin of [[streamRoundtrip]] — fresh sink dir AND fresh
-    * checkpoint per call (the source stream stays memoized: re-reading it is
-    * the workload; rebuilding it is not). For benchmark re-runs. */
-  def streamRoundtripFresh(s: SparkSession, sfDir: String): String = {
-    val dst = freshDir("graft-stream-rt-fresh-")
-    buildStreamRoundtrip(s, sfDir, dst)
-    dst
-  }
-
-  private def buildStreamRoundtrip(s: SparkSession, sfDir: String, dst: String): Unit = {
-    import org.apache.spark.sql.streaming.Trigger
-    tune(s)
-    val src = eventsStream(s, sfDir)
-    // checkpoint registered for [[dropFresh]]: once the AvailableNow drain
-    // terminates it is dead weight (queries only ever re-scan the sink)
-    val ckpt = freshDir("graft-ckpt-rt-")
-    val perTrigger = math.max(events(s, sfDir).count() / 8, 1L)
-    val q = s.readStream.format("eslog")
-      .option("maxOffsetsPerTrigger", perTrigger.toString)
-      .load(src)
-      .select("payload", "properties", "base_timestamp", "last_offset_delta", "flags")
-      .writeStream.format("eslog")
-      .option("path", dst)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(300000)
-  }
+    fixture(sfDir, "stream-rt") { dst =>
+      import org.apache.spark.sql.streaming.Trigger
+      tune(s)
+      val src = eventsStream(s, sfDir)
+      val ckpt = Files.createTempDirectory("graft-ckpt-rt-").toString
+      val perTrigger = math.max(events(s, sfDir).count() / 8, 1L)
+      val q = s.readStream.format("eslog")
+        .option("maxOffsetsPerTrigger", perTrigger.toString)
+        .load(src)
+        .select("payload", "properties", "base_timestamp", "last_offset_delta", "flags")
+        .writeStream.format("eslog")
+        .option("path", dst)
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow())
+        .start()
+      q.awaitTermination(300000)
+    }
 
   /** Streaming event-time windowed aggregation (1h tumbling + watermark) into
     * an in-memory complete-mode table; returns the result table name. */

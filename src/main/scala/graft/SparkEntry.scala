@@ -981,8 +981,8 @@ object SparkEntry {
 
   /** Train-or-reuse: learning is deterministic, so the per-sfDir stash is
     * safe to share across the four BPE-family queries — EXCEPT `text_bpe`
-    * itself, which always retrains (it is the benched query; a memoized
-    * no-op would fake its steady-state figure). */
+    * itself, which always retrains (timing it must time the learning; a
+    * memoized no-op would fake its steady-state figure). */
   private def bpeMergesFor(s: SparkSession, sfDir: String): Seq[(String, String)] =
     bpeMerges.computeIfAbsent(sfDir, _ => graft.operators.Bpe.learn(
       Fixtures.documents(s, sfDir), "doc_id", "text", numMerges = 40))
@@ -1585,8 +1585,8 @@ object SparkEntry {
     val emb = Fixtures.embeddings(s, sfDir)
     val books = Similarity.pqCodebooks(emb, "vec_id", "embedding", m = 8, ksub = 16)
     pqBooks.put(sfDir, books)
-    // deliberately does NOT touch lastKmeansSf: sim_pq runs in Bench's heads,
-    // and a bench at another SF between a verify's queries and its no-arg
+    // deliberately does NOT touch lastKmeansSf: sim_pq may run on its own,
+    // and a run at another SF between a verify's queries and its no-arg
     // oracleSql dump must not swap which dataset that dump keys on (the
     // per-sfDir stash itself is immune; only the no-arg key is at stake)
     Similarity.pqTopK(emb, emb.where(col("vec_id") < 10), "vec_id", "embedding",
@@ -1885,7 +1885,7 @@ object SparkEntry {
     // partitions; the kept SET is identical (r17, §2.3/§2.4 — the oracle
     // reproduces the same estimator from the same k minima).
     // (measured, not kept — r18: a one-pass (lang, shard)-grouped build
-    // with the tiny kept table shared() QTimed 0.53 s vs 0.45 s for this
+    // with the tiny kept table shared() measured 0.53 s vs 0.45 s for this
     // two-pass form — the cache's copy+persist machinery costs more than
     // the saved half-corpus scans at this SF.)
     def toks(d: DataFrame) = d
@@ -1915,7 +1915,7 @@ object SparkEntry {
     // (measured, not kept: a distinct-first pass — md5 once per distinct
     // token — costs MORE than the per-occurrence md5 it saves, because the
     // distinct shuffles vocabulary STRINGS while the register aggregate
-    // shuffles ≤ 2·langs·2^p rows; QTime 0.96 s vs 0.66 s)
+    // shuffles ≤ 2·langs·2^p rows; measured 0.96 s vs 0.66 s)
     val toks = docs
       .select(col("lang"), (col("doc_id") % 2 === 0).as("even"),
         explode(Portable.words(col("text"))).as("tok"))
@@ -2767,10 +2767,10 @@ object SparkEntry {
 
   /** No-argument form of [[oracleSqlFor]] (the driver contract's signature):
     * keys on the dataset [[qSimIvfKmeans]] ran against most recently —
-    * deliberately ONLY that query (not the PQ stashes, whose queries run in
-    * Bench heads): in any full verify all data-dependent queries run at the
-    * same sfDir, so that one key selects every stash, while a bench at a
-    * different SF in the same JVM cannot move it. */
+    * deliberately ONLY that query (not the PQ stashes, whose queries may
+    * run on their own): in any full verify all data-dependent queries run
+    * at the same sfDir, so that one key selects every stash, while a PQ
+    * query at a different SF in the same JVM cannot move it. */
   def oracleSql: Map[String, String] =
     lastKmeansSf.map(oracleSqlFor).getOrElse(Oracles.all)
 }

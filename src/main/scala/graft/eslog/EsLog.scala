@@ -326,15 +326,7 @@ object EsLog {
              extraActions: Seq[Action] = Seq.empty,
              targetFileBytes: Long = DefaultTargetFileBytes,
              extraGuards: Seq[KvGuard] = Seq.empty): (Long, Long) = {
-    val dbgT = sys.env.contains("GRAFT_APPEND_TIMING")
-    var dbgT0 = System.nanoTime()
-    def dbgMark(name: String): Unit = if (dbgT) {
-      val now = System.nanoTime()
-      System.err.println(f"[append-timing] $name: ${(now - dbgT0) / 1e9}%.3f s")
-      dbgT0 = now
-    }
     val st0 = MetaLog.load(streamDir)
-    dbgMark("load")
     if (st0.deleted) throw new IllegalStateException(s"stream $streamDir deleted")
     if (epoch < st0.epoch) throw new FencedException(s"append epoch $epoch < ${st0.epoch}")
 
@@ -395,10 +387,6 @@ object EsLog {
     // aggregates are order-insensitive, so reduce-side fetch-order jitter
     // between the jobs is harmless; `validateFooters` backstops the one
     // remaining hazard (shuffle-output loss + nondeterministic recompute).
-    // env-gated stage timing for perf work: GRAFT_APPEND_TIMING=1 prints
-    // per-stage seconds (load/normalize/plan/pass1/write/metas+footers/
-    // commit) to stderr
-    dbgMark("normalize")
     val internal0 = org.apache.spark.sql.graftshim.GraftShims.internalRdd(batches)
     // Write-time file rolling (the reference's RangeAccumulator sizes
     // offload objects to 128 MiB as it accumulates,
@@ -440,7 +428,6 @@ object EsLog {
           case None => internal0
         }
       else internal0
-    dbgMark("plan")
     // Pass 1: per-partition delta sums -> contiguous per-partition base
     // offsets. The distributed analogue of the write window: gap-free by
     // construction (window.rs:79-204), plus per-partition stats so commit
@@ -459,7 +446,6 @@ object EsLog {
       }
       Iterator((pid, s, n, maxD, minTs, maxTs))
     }.collect().sortBy(_._1)
-    dbgMark("pass1")
     val partStarts = partSums.scanLeft(next) { case (acc, p) => acc + p._2 }
     val total = partSums.map(_._2).sum
     if (total == 0) return (next, next)
@@ -505,7 +491,6 @@ object EsLog {
       // maxRecordsPerFile so the writer can never split a partition.
       .option("maxRecordsPerFile", "0")
       .parquet(outAbs)
-    dbgMark("write")
 
     // Commit from the pass-1 stats: one task partition = one written file
     // (`part-<pid>-*`), so file boundaries are known without re-reading data
@@ -527,11 +512,9 @@ object EsLog {
         deleteRecursively(outAbs)
         throw e
     }
-    dbgMark("metas+footers")
 
     try {
       MetaLog.commit(streamDir, st, Seq(CommitFiles(seg.index, epoch, files)) ++ extraActions)
-      dbgMark("commit")
     } catch {
       case scala.util.control.NonFatal(e) =>
         // The written files are unreachable on any pre-commit failure

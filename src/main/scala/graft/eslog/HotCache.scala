@@ -23,7 +23,7 @@ import graft.model.RecordBatchRow
   * bit-identical to a cold one.
   *
   * Admission is restricted to the stream's *hot window* — the suffix of files
-  * (by offset) whose byte sum fits `STREAM_BYTES` — so a full historical scan
+  * (by offset) whose byte sum fits the budget — so a full historical scan
   * can never pollute the cache (the classic scan-pollution guard; the
   * reference gets the same property by populating only from the append path).
   * Per-file grain makes the cache incremental: a new append adds new files to
@@ -56,20 +56,15 @@ object HotCache {
   /** Global cache budget in bytes (on-disk Parquet bytes as the accounting
     * unit, like the reference's cache which counts serialized block bytes).
     * 0 disables the cache entirely; unset defers to the scheme policy
-    * ([[AUTO_SCHEMES]]). */
+    * ([[DefaultAutoSchemes]]). The same budget bounds each stream's hot
+    * window. */
   val GLOBAL_BYTES = "spark.graft.eslog.hotCache.bytes"
 
-  /** Per-stream hot-window size in bytes: only the tail suffix of files whose
-    * byte sum fits is admissible. Defaults to the global budget. */
-  val STREAM_BYTES = "spark.graft.eslog.hotCache.streamBytes"
-
-  /** Comma-separated URI schemes where the cache auto-enables at
-    * [[DefaultAutoBytes]] when [[GLOBAL_BYTES]] is unset. */
-  val AUTO_SCHEMES = "spark.graft.eslog.hotCache.autoSchemes"
-
-  /** Object-store schemes: per-open round trips dominate tail reads there. */
-  val DefaultAutoSchemes =
-    "s3,s3a,s3n,gs,wasb,wasbs,abfs,abfss,oss,cos,obs"
+  /** Object-store URI schemes where the cache auto-enables at
+    * [[DefaultAutoBytes]] when [[GLOBAL_BYTES]] is unset: per-open round
+    * trips dominate tail reads there. */
+  val DefaultAutoSchemes: Set[String] =
+    Set("s3", "s3a", "s3n", "gs", "wasb", "wasbs", "abfs", "abfss", "oss", "cos", "obs")
 
   /** Auto-enable budget: 1 GiB of on-disk Parquet bytes per JVM — a few hot
     * tail windows, far below executor storage memory at any sane sizing. */
@@ -96,19 +91,14 @@ object HotCache {
   /** Effective global budget for a fetch of `streamDir`: an explicit
     * [[GLOBAL_BYTES]] always wins (0 disables, >0 enables, any scheme);
     * unset falls back to the scheme policy — [[DefaultAutoBytes]] for
-    * [[AUTO_SCHEMES]] members, 0 (off) otherwise. */
+    * [[DefaultAutoSchemes]] members, 0 (off) otherwise. */
   private[eslog] def effectiveBudget(spark: SparkSession, streamDir: String): Long =
     spark.conf.getOption(GLOBAL_BYTES).map(_.toLong).getOrElse {
-      val auto = spark.conf.getOption(AUTO_SCHEMES).getOrElse(DefaultAutoSchemes)
-        .split(',').iterator.map(_.trim.toLowerCase).filter(_.nonEmpty).toSet
-      if (auto.contains(scheme(streamDir))) DefaultAutoBytes else 0L
+      if (DefaultAutoSchemes.contains(scheme(streamDir))) DefaultAutoBytes else 0L
     }
 
-  private def streamBudget(spark: SparkSession, effective: Long): Long =
-    spark.conf.getOption(STREAM_BYTES).map(_.toLong).getOrElse(effective)
-
   /** The hot window: longest suffix of the state's files (by offset) whose
-    * byte sum fits the per-stream budget. */
+    * byte sum fits the budget. */
   private def hotWindow(st: StreamState, cap: Long): Set[String] = {
     val tail = st.allFiles.sortBy(_.startOffset).reverse
     var acc = 0L
@@ -126,7 +116,7 @@ object HotCache {
     val budget = effectiveBudget(spark, streamDir)
     if (budget <= 0) return None
     sweep(streamDir, st)
-    val window = hotWindow(st, streamBudget(spark, budget))
+    val window = hotWindow(st, budget)
     if (!metas.exists(m => window.contains(m.path))) return None
     val (hot, cold) = metas.partition(m => window.contains(m.path))
     val now = tick.incrementAndGet()

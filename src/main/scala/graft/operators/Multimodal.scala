@@ -70,8 +70,7 @@ object Multimodal {
     * larger) in deployment: the plan is corpus-linear at any divisor — only
     * the index-size constant changes (index rows ≈ corpus_bytes / divisor) —
     * and the codegen'd chunker's throughput RISES with the divisor (fewer
-    * cut tests succeed, fewer md5 digests per byte; the bench reports
-    * measured MB/s at both 16 and this value side by side). The
+    * cut tests succeed, fewer md5 digests per byte). The
     * deployment-shaped APIs ([[writeMediaLibraryIndex]],
     * [[mediaDedupProbe]]) DEFAULT to this value — fixtures pass 16
     * explicitly — so building a corpus-scale index with the parameter
@@ -88,16 +87,17 @@ object Multimodal {
     * corpus-vs-corpus job is [[binaryNearDupsCdc]], not this API. */
   val MaxProbeChunks: Long = 4000000L
 
-  /** Params-sidecar memo for the probe hot path. Committed sidecars are
-    * IMMUTABLE files under generation-unique names (written before the
+  /** Params-sidecar memo for the probe hot path. A REBUILD's sidecars are
+    * IMMUTABLE files under generation-suffixed names (written before the
     * pointer flip — [[writeMediaLibraryIndex]]), so their 1-row contents
     * memoize safely by absolute path: before r18 every
     * [[mediaDedupProbeAt]] call re-read the same tiny parquet through a
     * full Spark job (~0.15 s of driver latency per probe at sf0.1, once
-    * per micro-batch in the streaming screen). Legacy bare-named params
-    * files (pre-sidecar indexes) can be overwritten in place by a rebuild
-    * and are NEVER memoized. Bounded LRU, metadata only — the same class
-    * of cache as Spark's own file-listing session cache. */
+    * per micro-batch in the streaming screen). The bare `params` name —
+    * what a FIRST build and pre-sidecar indexes use — is NEVER memoized:
+    * deleting the index dir and building again at the same path rewrites
+    * that file in place. Bounded LRU, metadata only — the same class of
+    * cache as Spark's own file-listing session cache. */
   private val paramsMemo =
     new java.util.LinkedHashMap[String, org.apache.spark.sql.Row](16, 0.75f, true) {
       override def removeEldestEntry(
@@ -107,7 +107,7 @@ object Multimodal {
   private def readParams(spark: SparkSession,
                          snap: IndexCommit.ReadSnapshot): org.apache.spark.sql.Row = {
     val path = snap.sidecar("params")
-    val memoizable = snap.sidecars.contains("params")
+    val memoizable = snap.sidecars.get("params").exists(_ != "params")
     if (memoizable) {
       val got = paramsMemo.synchronized(paramsMemo.get(path))
       if (got != null) return got
@@ -116,9 +116,6 @@ object Multimodal {
     if (memoizable) paramsMemo.synchronized { paramsMemo.put(path, row); () }
     row
   }
-  /** Test seam: forget memoized params (e.g. after deleting index dirs). */
-  private[graft] def clearParamsMemo(): Unit =
-    paramsMemo.synchronized(paramsMemo.clear())
 
   /** STUB decoder: deterministic fake feature extraction from payload bytes.
     * A real deployment decodes here (libjpeg/ffmpeg/...); the arithmetic is
@@ -501,7 +498,7 @@ object Multimodal {
     * bucket are fixed by the layout), so planning does ZERO tree listing or
     * footer inference — before r18 every probe ran
     * [[IndexCommit.inferAcross]] over the live trees (a driver-side
-    * metadata pass per probe, §6; ProbeProf billed the snapshot+infer
+    * metadata pass per probe, §6; profiling billed the snapshot+infer
     * stage ~0.3 s of the 1.5 s head at sf0.1, and at corpus scale the
     * listing grows with the tree count). Pre-id_name sidecars (legacy
     * indexes) keep the inference fallback. */
@@ -584,7 +581,14 @@ object Multimodal {
     * (default [[MaxProbeChunks]]) the probe FAILS FAST naming the knob
     * rather than OOMing the driver mid-broadcast — the scaladoc's
     * "micro-batch-sized" contract, enforced. Corpus-vs-corpus jobs belong
-    * on [[binaryNearDupsCdc]] (shuffle equi-join, no broadcast). */
+    * on [[binaryNearDupsCdc]] (shuffle equi-join, no broadcast).
+    *
+    * `incoming` MUST be deterministic (e.g. no unseeded sample, no `rand()`
+    * column): its chunk set is computed TWICE, once for the guard count and
+    * probed-bucket collect and once for the broadcast build, with no cache
+    * between them. A frame that differs between the two evaluations could
+    * pass the `maxProbeChunks` guard with one chunk set and broadcast
+    * another. */
   def mediaDedupProbeAt(spark: SparkSession, dir: String, incoming: DataFrame,
                         idCol: String, payloadCol: String,
                         minShared: Int = 4,
@@ -599,7 +603,7 @@ object Multimodal {
     // NOT shared()-cached (r18): the chunk set is micro-batch-bounded by
     // contract (the guard below), so re-chunking it once for the guard agg
     // and once for the broadcast build costs less than the cache's
-    // copy+persist+read machinery did (ProbeProf: ~0.2 s of a 1.4 s head),
+    // copy+persist+read machinery did (~0.2 s of a 1.4 s probe at sf0.1),
     // and leaves no executor-storage block behind per probe call.
     val inc = cdcChunkRows(incoming, idCol, payloadCol, window, divisor)
       .select(col(idCol).as("incoming"), col("ch"))

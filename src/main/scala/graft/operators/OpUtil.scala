@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.graftshim.GraftShims
 import org.apache.spark.storage.StorageLevel
@@ -54,20 +56,22 @@ private[graft] object OpUtil {
   def shared(df: DataFrame): DataFrame = sharedWithHandle(df)._1
 
   /** Ceiling on LIVE [[shared]] caches before the oldest is unpersisted
-    * eagerly (`spark.graft.sharedCacheMaxLive` overrides). ContextCleaner
-    * unpersist needs the backing RDD to be garbage-collected first, so a
-    * long-lived session stacking operator calls accumulated
-    * MEMORY_AND_DISK blocks until a GC happened to run (r17 verdict item).
-    * Eviction is correctness-neutral: an unpersisted shared RDD recomputes
-    * from its lineage on next use — the worst case is the pre-cache
-    * recompute cost, never a wrong result. The default comfortably covers
-    * one query's caches (≤4) times a realistically concurrent query count;
-    * SharedCacheSpec pins both the bound and post-eviction recompute. */
-  private val SharedCacheMaxLiveKey = "spark.graft.sharedCacheMaxLive"
-  private val SharedCacheMaxLiveDefault = 64
-  private val liveShared = new java.util.ArrayDeque[org.apache.spark.rdd.RDD[_]]()
+    * eagerly. The registry holds WEAK references: a cache whose frames are
+    * all garbage-collected drops out of it and the ContextCleaner unpersists
+    * it as before. The cap is a backstop for a long-lived session that keeps
+    * many shared() frames reachable at once, whose MEMORY_AND_DISK blocks
+    * would otherwise stay pinned until those frames die. Eviction is
+    * correctness-neutral: an unpersisted shared RDD recomputes from its
+    * lineage on next use — the worst case is the pre-cache recompute cost,
+    * never a wrong result. The cap comfortably covers one query's caches
+    * (≤4) times a realistically concurrent query count; SharedCacheSpec pins
+    * both the bound and post-eviction recompute. */
+  private[graft] val SharedCacheMaxLive = 64
+  private val liveShared =
+    new java.util.ArrayDeque[java.lang.ref.WeakReference[org.apache.spark.rdd.RDD[_]]]()
   /** Live shared-cache count (test seam). */
-  private[graft] def liveSharedCount: Int = liveShared.synchronized(liveShared.size)
+  private[graft] def liveSharedCount: Int =
+    liveShared.synchronized(liveShared.asScala.count(_.get != null))
 
   /** [[shared]], also returning the backing RDD so an iterative caller can
     * unpersist each round's cache EXPLICITLY once the next round is
@@ -77,14 +81,11 @@ private[graft] object OpUtil {
     val spark = df.sparkSession
     val rdd = GraftShims.internalRdd(df).map(_.copy())
     rdd.persist(StorageLevel.MEMORY_AND_DISK)
-    val cap = try spark.conf.get(SharedCacheMaxLiveKey,
-      SharedCacheMaxLiveDefault.toString).toInt
-    catch { case _: NumberFormatException => SharedCacheMaxLiveDefault }
     liveShared.synchronized {
-      liveShared.addLast(rdd)
-      while (liveShared.size > math.max(1, cap)) {
-        liveShared.removeFirst().unpersist(blocking = false); ()
-      }
+      liveShared.removeIf(_.get == null)
+      liveShared.addLast(new java.lang.ref.WeakReference(rdd))
+      while (liveShared.size > SharedCacheMaxLive)
+        Option(liveShared.removeFirst().get).foreach(_.unpersist(blocking = false))
     }
     (GraftShims.dfFromInternalRdd(spark, rdd, df.schema), rdd)
   }

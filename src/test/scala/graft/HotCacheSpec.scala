@@ -15,8 +15,6 @@ class HotCacheSpec extends SparkTestBase with BeforeAndAfterEach {
   override def beforeEach(): Unit = {
     HotCache.clear()
     spark.conf.unset(HotCache.GLOBAL_BYTES)
-    spark.conf.unset(HotCache.STREAM_BYTES)
-    spark.conf.unset(HotCache.AUTO_SCHEMES)
     CountingLocalFileSystem.reset()
   }
   override def afterEach(): Unit = beforeEach()
@@ -74,8 +72,7 @@ class HotCacheSpec extends SparkTestBase with BeforeAndAfterEach {
     val bytes = graft.meta.MetaLog.load(dir).allFiles.sortBy(_.startOffset)
     // window fits only the last append's files
     val windowBytes = bytes.takeRight(2).map(_.bytes).sum
-    spark.conf.set(HotCache.GLOBAL_BYTES, (64L * 1024 * 1024).toString)
-    spark.conf.set(HotCache.STREAM_BYTES, windowBytes.toString)
+    spark.conf.set(HotCache.GLOBAL_BYTES, windowBytes.toString)
     // full historical scan: only tail-window files may be admitted
     assert(EsLog.scan(spark, dir).count() == 1000)
     val admitted = HotCache.resident.keySet
@@ -255,15 +252,6 @@ class HotCacheSpec extends SparkTestBase with BeforeAndAfterEach {
     assert(usesInMemory(hot) && rows(hot) == cold)
     assert(CountingLocalFileSystem.dataFileOpens == 0L,
       "a steady-state hot tail fetch must not touch the object store")
-  }
-
-  test("AUTO_SCHEMES is configurable: dropping the scheme turns auto-enable off") {
-    val dir = mkObjectStream(40, id = 92L)
-    spark.conf.set(HotCache.AUTO_SCHEMES, "gs,abfss")
-    val df = EsLog.fetch(spark, dir, 0, 40)
-    assert(!usesInMemory(df))
-    assert(df.count() == 40)
-    assert(HotCache.resident.isEmpty)
   }
 
   test("compaction swap and delete invalidate cleanly") {

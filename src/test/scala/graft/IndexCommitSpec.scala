@@ -279,33 +279,66 @@ class IndexCommitSpec extends SparkTestBase {
     assert(dead.size == 2, s"base + slice reclaimed: $dead")
   }
 
-  test("media library rebuild with new chunk params: probes use the NEW divisor (params memo safe)") {
+  /** Media payloads of random bytes in near-copy pairs (i, i+3): CDC cuts
+    * them differently at divisor 16 and 32, so a probe's result tells which
+    * params the index was read with. */
+  private def paramsDocs: DataFrame = {
     import spark.implicits._
+    val rnd = new scala.util.Random(7)
+    val bases = Array.fill(3)(Array.fill(2048)(rnd.nextInt(256).toByte))
+    (0L until 6L).map { i =>
+      val p = bases((i % 3).toInt).clone()
+      p((i * 331 % 2048).toInt) = (p((i * 331 % 2048).toInt) + 1).toByte
+      (i, p)
+    }.toDF("media_id", "payload")
+  }
+
+  private def buildParamsIndex(root: String, divisor: Int): Unit =
+    Multimodal.writeMediaLibraryIndex(paramsDocs, "media_id", "payload", root,
+      window = 8, divisor = divisor, maxDf = 64, nBuckets = 8)
+
+  private def probeSet(df: DataFrame): Set[(Long, Long, Long)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+
+  private def probeViaIndex(root: String) = probeSet(Multimodal.mediaDedupProbeAt(
+    spark, root, paramsDocs.where(col("media_id") < 2), "media_id", "payload",
+    minShared = 1))
+
+  private def probeInMemory(divisor: Int) = probeSet(Multimodal.mediaDedupProbe(
+    Multimodal.cdcChunkHashes(paramsDocs, "media_id", "payload",
+      window = 8, divisor = divisor, maxDf = 64)
+      .select(col("media_id").as("existing_id"), col("ch")),
+    paramsDocs.where(col("media_id") < 2), "media_id", "payload", window = 8,
+    divisor = divisor, minShared = 1))
+
+  test("media library rebuild with new chunk params: probes use the NEW divisor (params memo safe)") {
     // r18 memoizes the immutable params sidecar by path; a REBUILD commits a
     // NEW generation-unique sidecar, so probes must pick up the new divisor
     // through the pointer, never a stale memo entry
-    val docs = (0L until 6L).map(i =>
-      (i, (s"payload-$i-" + "x" * 200).getBytes("UTF-8"))).toDF("media_id", "payload")
+    assert(probeInMemory(16) != probeInMemory(32), "the fixture must tell the divisors apart")
     val root = tmpDir("ixc-media-params-")
-    Multimodal.writeMediaLibraryIndex(docs, "media_id", "payload", root,
-      window = 8, divisor = 16, maxDf = 64, nBuckets = 8)
-    val probe = docs.limit(2)
-    def viaIndex() = Multimodal.mediaDedupProbeAt(spark, root, probe,
-      "media_id", "payload", minShared = 1)
-      .as[(Long, Long, Long)].collect().toSet
-    def inMemory(divisor: Int) = Multimodal.mediaDedupProbe(
-      graft.operators.Multimodal.cdcChunkHashes(docs, "media_id", "payload",
-        window = 8, divisor = divisor, maxDf = 64)
-        .select(col("media_id").as("existing_id"), col("ch")),
-      probe, "media_id", "payload", window = 8, divisor = divisor,
-      minShared = 1).as[(Long, Long, Long)].collect().toSet
-    assert(viaIndex() === inMemory(16))
+    buildParamsIndex(root, divisor = 16)
+    assert(probeViaIndex(root) === probeInMemory(16))
     // rebuild the SAME dir with a different divisor: the probe must chunk
     // with 32 (sidecar of the new generation), not a memoized 16
-    Multimodal.writeMediaLibraryIndex(docs, "media_id", "payload", root,
-      window = 8, divisor = 32, maxDf = 64, nBuckets = 8)
-    assert(viaIndex() === inMemory(32),
+    buildParamsIndex(root, divisor = 32)
+    assert(probeViaIndex(root) === probeInMemory(32),
       "probe after rebuild must use the rebuilt generation's divisor")
+  }
+
+  test("media library deleted out of band and built again at the same path: probes read the NEW params") {
+    // a FIRST build writes the bare `params` sidecar; deleting the dir and
+    // building again rewrites that same path, so it must never be memoized
+    val root = tmpDir("ixc-media-oob-")
+    buildParamsIndex(root, divisor = 16)
+    assert(probeViaIndex(root) === probeInMemory(16))
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
+    try walk.sorted(java.util.Comparator.reverseOrder())
+      .forEach(p => java.nio.file.Files.delete(p))
+    finally walk.close()
+    buildParamsIndex(root, divisor = 32)
+    assert(probeViaIndex(root) === probeInMemory(32),
+      "probe after an out-of-band delete and rebuild must use the new divisor")
   }
 
   test("appended IVF index: partition pruning engages on EVERY live tree") {

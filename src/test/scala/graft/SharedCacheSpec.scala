@@ -12,25 +12,26 @@ import graft.operators.OpUtil
 class SharedCacheSpec extends SparkTestBase {
 
   test("live shared caches stay bounded under repeated operator calls") {
-    spark.conf.set("spark.graft.sharedCacheMaxLive", "8")
-    try {
-      val frames = (1 to 40).map { i =>
-        val (df, _) = OpUtil.sharedWithHandle(
-          spark.range(100).select(col("id"), lit(i).as("tag")))
-        df.count() // materialize the cache like an operator action would
-        df
-      }
-      // registry bounded at the cap...
-      assert(OpUtil.liveSharedCount <= 8)
-      // ...and the Spark-side persistent-RDD map does not grow without
-      // bound either: at most cap live shared caches remain cached (other
-      // suites' caches may coexist in the shared session, so count only
-      // growth across THIS loop, which created 40)
-      val cachedNow = spark.sparkContext.getPersistentRDDs.size
-      assert(cachedNow < 40, s"expected eager eviction, $cachedNow RDDs cached")
-      // an EVICTED frame (the first one) recomputes from lineage, same rows
-      assert(frames.head.agg(sum("id")).collect().head.getLong(0) === 4950L)
-      assert(frames.head.select(max("tag")).collect().head.getInt(0) === 1)
-    } finally spark.conf.unset("spark.graft.sharedCacheMaxLive")
+    val cap = OpUtil.SharedCacheMaxLive
+    val n = 2 * cap
+    // every frame stays reachable, so only eviction at the cap can bound
+    // the registry (the ContextCleaner never sees a dead cache here)
+    val frames = (1 to n).map { i =>
+      val (df, _) = OpUtil.sharedWithHandle(
+        spark.range(100).select(col("id"), lit(i).as("tag")))
+      df.count() // materialize the cache like an operator action would
+      df
+    }
+    // registry bounded at the cap...
+    assert(OpUtil.liveSharedCount <= cap)
+    // ...and the Spark-side persistent-RDD map does not grow without
+    // bound either: at most cap live shared caches remain cached (other
+    // suites' caches may coexist in the shared session, so count only
+    // growth across THIS loop, which created n)
+    val cachedNow = spark.sparkContext.getPersistentRDDs.size
+    assert(cachedNow < n, s"expected eager eviction, $cachedNow RDDs cached")
+    // an EVICTED frame (the first one) recomputes from lineage, same rows
+    assert(frames.head.agg(sum("id")).collect().head.getLong(0) === 4950L)
+    assert(frames.head.select(max("tag")).collect().head.getInt(0) === 1)
   }
 }
